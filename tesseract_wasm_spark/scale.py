@@ -8,8 +8,11 @@ Resume model (SURVEY.md §4 O11): the results table is keyed by url; a run
 anti-joins the input against already-written urls and processes only the
 remainder. Replaying a partition is therefore idempotent — its urls are
 already present and anti-joined away. With an Iceberg catalog the appends are
-ACID; on plain parquet (this sandbox) the same layout applies with
+ACID; on plain parquet (this sandbox) the same model applies with
 last-writer-wins semantics per run_id.
+
+Layout: a fresh parquet results table is flat, one file per write task;
+appends keep whatever layout is already on disk (see _append_results).
 """
 
 from __future__ import annotations
@@ -22,12 +25,12 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from tesseract_wasm_spark.pipeline import extract_any, metrics_df, ocr_pages
 
 
-#: url-hash bucket fan-out for the results table layout. Every result row
-#: carries url_bucket = pmod(xxhash64(url), URL_BUCKETS) and plain-parquet
-#: writes partition by it, so at 10^12 rows (a) the resume anti-join keys on
-#: (url_bucket, url) — with an Iceberg bucket-partitioned table the join
-#: becomes a storage-partitioned join and the completed side is never
-#: shuffled; (b) any single bucket is independently replayable/compactable.
+#: url-hash bucket fan-out for the results table. Every result row carries
+#: url_bucket = pmod(xxhash64(url), URL_BUCKETS) as a data column and each
+#: file is sorted by (url_bucket, url), so at 10^12 rows (a) the resume
+#: anti-join keys on (url_bucket, url) — with an Iceberg bucket-partitioned
+#: table the join becomes a storage-partitioned join and the completed side
+#: is never shuffled; (b) any single bucket is a contiguous range per file.
 URL_BUCKETS = 256
 
 
@@ -39,7 +42,7 @@ def iceberg_results_ddl(table: str, df: DataFrame, *,
                         bucket_on: str = "url") -> str:
     """The CREATE TABLE statement an Iceberg deployment runs ONCE before the
     first append — the partition-spec twin of the parquet layout: parquet
-    partitions by the materialized ``url_bucket`` column (pmod(xxhash64)),
+    materializes the ``url_bucket`` column (pmod(xxhash64)),
     Iceberg declares ``bucket(URL_BUCKETS, url)`` natively so the catalog
     owns the transform (Iceberg buckets with murmur3 rather than xxhash64 —
     the VALUES differ but the contract is the same: a fixed URL_BUCKETS-way
@@ -83,10 +86,10 @@ def write_table(df: DataFrame, path: str, *, fmt: str | None = None,
         )
         fmt = "iceberg" if has_iceberg else "parquet"
     if fmt == "iceberg":
-        if "url_bucket" in partition_by and "url_bucket" in df.columns:
+        if "url_bucket" in getattr(df, "columns", ()):
             # the Iceberg spec (bucket(URL_BUCKETS, url), see
             # iceberg_results_ddl) owns the fan-out; the materialized column
-            # exists only for the parquet directory layout
+            # exists only for the parquet layout, whichever one it is
             df = df.drop("url_bucket")
         df.writeTo(path).append()
     else:
@@ -118,6 +121,54 @@ def completed_urls(spark: SparkSession, results_path: str, mode: str = "full") -
     return df.select(*cols)
 
 
+def _has_bucket_dirs(spark: SparkSession, path: str) -> bool:
+    """Whether the table root holds hive ``url_bucket=`` directories: one
+    glob through the Hadoop FileSystem, so it works on any store."""
+    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    fs = Path(path).getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    return bool(fs.globStatus(Path(path, "url_bucket=*")))
+
+
+def _append_results(spark: SparkSession, out: DataFrame, path: str,
+                    done: DataFrame | None) -> None:
+    """Append in the layout already on disk, since mixing layouts makes a
+    table unreadable: no ``url_bucket`` for a pre-bucketing table, hive
+    ``url_bucket=`` directories for a table that has them, else flat files
+    sorted by (url_bucket, url)."""
+    bucketed = out.withColumn("url_bucket", url_bucket_col())
+    if done is not None and "url_bucket" not in done.columns:
+        write_table(out, path)
+    elif done is not None and _has_bucket_dirs(spark, path):
+        write_table(bucketed, path, partition_by=("url_bucket",))
+    else:
+        write_table(bucketed.sortWithinPartitions("url_bucket", "url"), path)
+
+
+def _resume(spark: SparkSession, pages: DataFrame, path: str, mode: str,
+            extract, after_write) -> dict:
+    """Anti-join ``pages`` against the urls done at ``path`` in ``mode``,
+    ``extract`` and append the rest, then ``after_write(res, run_id)`` adds
+    its outputs and summary keys. The cache is released however it ends."""
+    run_id = uuid.uuid4().hex
+    done = completed_urls(spark, path, mode)
+    todo = pages if done is None else (
+        pages.withColumn("url_bucket", url_bucket_col())
+        .join(done, done.columns, "left_anti").drop("url_bucket"))
+    res = extract(todo).persist()
+    try:
+        n = res.count()
+        if n == 0:
+            return {"run_id": run_id, "pages": 0, "resumed": done is not None}
+        out = res.withColumn("run_id", F.lit(run_id)).withColumn("mode", F.lit(mode))
+        _append_results(spark, out, path, done)
+        extra = after_write(res, run_id)
+        errors = res.filter(F.col("error").isNotNull()).count()
+        return {"run_id": run_id, "pages": n, "errors": errors, **extra,
+                "resumed": done is not None}
+    finally:
+        res.unpersist()
+
+
 def run_with_resume(
     spark: SparkSession,
     pages: DataFrame,
@@ -132,47 +183,18 @@ def run_with_resume(
     results + per-partition metrics. Returns a small run summary dict.
     ``model_blob``: optional TWSM2 trained-weight blob shipped to workers
     (see pipeline.ocr_pages)."""
-    results_path = f"{out_dir}/results"
-    metrics_path = f"{out_dir}/metrics"
-    run_id = uuid.uuid4().hex
-    mode = "full" if with_text else "layout"
 
-    done = completed_urls(spark, results_path, mode)
-    # a pre-bucketing results table keeps its legacy flat layout: appending
-    # partitioned files into an unpartitioned directory corrupts the table
-    legacy = done is not None and "url_bucket" not in done.columns
-    if done is None:
-        todo = pages
-    elif not legacy:
-        # anti-join on (url_bucket, url): with a bucket-partitioned results
-        # table both sides arrive bucket-aligned (storage-partitioned join on
-        # Iceberg; partition-pruned scan on parquet)
-        todo = (
-            pages.withColumn("url_bucket", url_bucket_col())
-            .join(done, ["url_bucket", "url"], "left_anti")
-            .drop("url_bucket")
-        )
-    else:  # pre-bucketing layout (older results tables)
-        todo = pages.join(done, "url", "left_anti")
+    def write_metrics(res: DataFrame, run_id: str) -> dict:
+        write_table(metrics_df(res).withColumn("run_id", F.lit(run_id)),
+                    f"{out_dir}/metrics")
+        return {}
 
-    res = ocr_pages(todo, with_text=with_text, recognizer=recognizer,
-                    model_blob=model_blob,
-                    num_partitions=num_partitions).persist()
-    n = res.count()
-    if n == 0:
-        res.unpersist()
-        return {"run_id": run_id, "pages": 0, "resumed": done is not None}
-
-    out = res.withColumn("run_id", F.lit(run_id)).withColumn("mode", F.lit(mode))
-    if legacy:
-        write_table(out, results_path)
-    else:
-        write_table(out.withColumn("url_bucket", url_bucket_col()),
-                    results_path, partition_by=("url_bucket",))
-    write_table(metrics_df(res).withColumn("run_id", F.lit(run_id)), metrics_path)
-    errors = res.filter(F.col("error").isNotNull()).count()
-    res.unpersist()
-    return {"run_id": run_id, "pages": n, "errors": errors, "resumed": done is not None}
+    return _resume(
+        spark, pages, f"{out_dir}/results", "full" if with_text else "layout",
+        lambda todo: ocr_pages(todo, with_text=with_text, recognizer=recognizer,
+                               model_blob=model_blob, num_partitions=num_partitions),
+        write_metrics,
+    )
 
 
 def run_extract_with_resume(
@@ -191,36 +213,14 @@ def run_extract_with_resume(
     summary; per-partition lineage for the heavy OCR branch stays available
     via the run_with_resume path (the HTML/PDF branches are pure expressions
     with no Python stage to instrument)."""
-    path = f"{out_dir}/extracted"
-    run_id = uuid.uuid4().hex
-    done = completed_urls(spark, path, mode="extract")
-    legacy = done is not None and "url_bucket" not in done.columns
-    if done is None:
-        todo = pages
-    elif not legacy:
-        todo = (
-            pages.withColumn("url_bucket", url_bucket_col())
-            .join(done, ["url_bucket", "url"], "left_anti")
-            .drop("url_bucket")
-        )
-    else:
-        todo = pages.join(done, "url", "left_anti")
 
-    res = extract_any(todo, recognizer=recognizer,
-                      num_partitions=num_partitions,
-                      model_blob=model_blob).persist()
-    n = res.count()
-    if n == 0:
-        res.unpersist()
-        return {"run_id": run_id, "pages": 0, "resumed": done is not None}
-    out = res.withColumn("run_id", F.lit(run_id)).withColumn("mode", F.lit("extract"))
-    if legacy:
-        write_table(out, path)
-    else:
-        write_table(out.withColumn("url_bucket", url_bucket_col()),
-                    path, partition_by=("url_bucket",))
-    kinds = {r["kind"]: r["n"] for r in res.groupBy("kind").agg(F.count("*").alias("n")).collect()}
-    errors = res.filter(F.col("error").isNotNull()).count()
-    res.unpersist()
-    return {"run_id": run_id, "pages": n, "errors": errors, "kinds": kinds,
-            "resumed": done is not None}
+    def count_kinds(res: DataFrame, _run_id: str) -> dict:
+        by_kind = res.groupBy("kind").agg(F.count("*").alias("n")).collect()
+        return {"kinds": {r["kind"]: r["n"] for r in by_kind}}
+
+    return _resume(
+        spark, pages, f"{out_dir}/extracted", "extract",
+        lambda todo: extract_any(todo, recognizer=recognizer,
+                                 num_partitions=num_partitions, model_blob=model_blob),
+        count_kinds,
+    )

@@ -749,18 +749,21 @@ def test_pack_sequences_bucketed_prefix_matches_window(spark):
 
     rows = [(i * (1 << 19) + 7, "s" + str(i % 3), "w " * (37 + i * 13))
             for i in range(24)]
+    # NULL keys: the classic window keeps these rows, so the join must too
+    rows += [(None, "s0", "w " * 5), (None, "s0", "w " * 9),
+             (3 << 20, None, "w " * 11), (None, None, "w " * 13)]
     docs = spark.createDataFrame(rows, "doc_id long, source string, text string")
     toks = F.size(F.split(F.trim(F.col("text")), WS_RE))
     w = Window.partitionBy("source").orderBy("doc_id")
     cum = F.sum(toks).over(w) - toks
-    want = sorted(tuple(r) for r in docs.select(
+    want = sorted((tuple(r) for r in docs.select(
         "source", "doc_id", toks.alias("n_tokens"),
         F.floor(cum / 2048).alias("seq_id"),
         (cum % 2048).alias("offset_in_seq"),
-    ).collect())
-    got = sorted(tuple(r) for r in
-                 packing.pack_sequences(docs, target_tokens=2048).collect())
-    assert got == want
+    ).collect()), key=repr)
+    got = sorted((tuple(r) for r in
+                  packing.pack_sequences(docs, target_tokens=2048).collect()), key=repr)
+    assert len(got) == len(rows) and got == want
 
 
 def test_punct_count_matches_regex(spark):

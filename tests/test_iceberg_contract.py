@@ -118,6 +118,12 @@ def test_write_table_iceberg_drops_layout_bucket_column(spark):
                       partition_by=("url_bucket",))
     assert calls == [("drop", ("url_bucket",)),
                      ("writeTo", "crawl.db.results"), "append"]
+    # the flat layout carries url_bucket without partitioning by it
+    calls_flat: list = []
+    df_flat = _FakePartitionedDF(spark, calls_flat, ["url", "text_out", "url_bucket"])
+    scale.write_table(df_flat, "crawl.db.results", fmt="iceberg", partition_by=())
+    assert calls_flat == [("drop", ("url_bucket",)),
+                          ("writeTo", "crawl.db.results"), "append"]
     # a frame without the layout column appends untouched
     calls2: list = []
     df2 = _FakePartitionedDF(spark, calls2, ["url", "text_out"])

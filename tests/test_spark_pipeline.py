@@ -237,18 +237,81 @@ def test_resume_is_mode_scoped(spark, pages, tmp_path):
     assert set(r["mode"] for r in res.select("mode").distinct().collect()) == {"layout", "full"}
 
 
-def test_results_bucket_layout(spark, pages, tmp_path):
-    """Results land hive-partitioned by url_bucket = pmod(xxhash64(url), 256)
-    so the 10^12-row resume anti-join keys on (url_bucket, url) — the layout
-    an Iceberg bucket partition spec turns into a storage-partitioned join."""
+def _parquet_files(path):
     import os
 
-    out = str(tmp_path / "bl")
-    run_with_resume(spark, pages.limit(6), out)
-    subdirs = [d for d in os.listdir(f"{out}/results") if d.startswith("url_bucket=")]
-    assert len(subdirs) >= 2  # 6 urls spread over >= 2 of 256 buckets
+    return [os.path.join(root, n) for root, _dirs, names in os.walk(path)
+            for n in names if n.endswith(".parquet")]
+
+
+def test_results_flat_layout(spark, pages, tmp_path):
+    """A fresh results table is flat: one parquet file per write task, with
+    url_bucket = pmod(xxhash64(url), 256) as a data column and rows sorted by
+    (url_bucket, url) in every file — the resume anti-join still keys on
+    (url_bucket, url) without a writer per (task x bucket)."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from tesseract_wasm_spark.scale import URL_BUCKETS
+
+    out = str(tmp_path / "flat")
+    s1 = run_with_resume(spark, pages.limit(6), out, num_partitions=3)
+    assert s1["pages"] == 6
+    assert not [d for d in os.listdir(f"{out}/results") if d.startswith("url_bucket=")]
+    files = _parquet_files(f"{out}/results")
+    assert 1 <= len(files) <= 3
+    for f in files:
+        t = pq.read_table(f, columns=["url_bucket", "url"]).to_pydict()
+        keys = list(zip(t["url_bucket"], t["url"]))
+        assert keys == sorted(keys)
+    res = spark.read.parquet(f"{out}/results")
+    want = F.pmod(F.xxhash64("url"), F.lit(URL_BUCKETS)).cast("int")
+    assert res.filter(F.col("url_bucket") == want).count() == res.count() == 6
     s2 = run_with_resume(spark, pages.limit(6), out)
     assert s2["pages"] == 0 and s2["resumed"] is True
+
+
+def test_resume_appends_into_hive_bucket_layout(spark, pages, tmp_path):
+    """A table written in the older hive url_bucket= layout keeps that
+    layout: appending flat files beside the directories would make it
+    unreadable."""
+    import os
+
+    from tesseract_wasm_spark.pipeline import ocr_pages as _ocr
+    from tesseract_wasm_spark.scale import url_bucket_col
+
+    out = str(tmp_path / "hive")
+    (_ocr(pages.limit(5)).withColumn("run_id", F.lit("hive"))
+        .withColumn("mode", F.lit("full")).withColumn("url_bucket", url_bucket_col())
+        .write.partitionBy("url_bucket").mode("append").parquet(f"{out}/results"))
+    before = set(_parquet_files(f"{out}/results"))
+    s = run_with_resume(spark, pages, out)
+    assert s["resumed"] is True and s["pages"] == pages.count() - 5
+    added = set(_parquet_files(f"{out}/results")) - before
+    assert added and all(
+        os.path.basename(os.path.dirname(f)).startswith("url_bucket=") for f in added)
+    assert not [n for n in os.listdir(f"{out}/results") if n.endswith(".parquet")]
+    got = spark.read.parquet(f"{out}/results")
+    assert got.count() == got.select("url").distinct().count() == pages.count()
+
+
+def test_failed_write_leaves_nothing_cached(spark, pages, tmp_path):
+    """The extracted frame is unpersisted even when the results write
+    fails (here: ``results`` is a regular parquet file, not a directory)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from py4j.protocol import Py4JJavaError
+
+    out = tmp_path / "broken"
+    out.mkdir()
+    pq.write_table(pa.table({"url": ["elsewhere"], "mode": ["full"]}),
+                   str(out / "results"))
+    jsc = spark.sparkContext._jsc
+    cached = set(jsc.getPersistentRDDs().keySet())
+    with pytest.raises(Py4JJavaError):
+        run_with_resume(spark, pages.limit(3), str(out))
+    assert set(jsc.getPersistentRDDs().keySet()) == cached
 
 
 def test_resume_pre_bucketing_fallback(spark, pages, tmp_path):
