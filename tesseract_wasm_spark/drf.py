@@ -15,7 +15,8 @@ numpy-decodable container:
 
 Input validation reproduces the reference's observable error behavior exactly
 (messages pinned by reference tests test/ocr-engine-test.js:63-85):
-  - payload length mismatch -> "Image data length does not match width/height"
+  - payload length mismatch, including a corrupt or truncated zlib body ->
+    "Image data length does not match width/height"
     (reference: src/ocr-engine.ts:179-181)
   - zero/negative dimensions -> "Image width or height is zero"
     (reference: src/ocr-engine.ts:183-185)
@@ -62,7 +63,10 @@ def decode(payload: bytes) -> np.ndarray:
         raise ValueError(ERR_ZERO_DIM)
     if ch not in (1, CHANNELS):
         raise ValueError(ERR_BAD_MAGIC)
-    raw = zlib.decompress(payload[HEADER_LEN:])
+    try:
+        raw = zlib.decompress(payload[HEADER_LEN:])
+    except zlib.error:  # corrupt or truncated body: no pixels of w*h*ch
+        raise ValueError(ERR_BAD_LENGTH) from None
     if len(raw) != w * h * ch:
         raise ValueError(ERR_BAD_LENGTH)
     return np.frombuffer(raw, dtype=np.uint8).reshape(h, w, ch)

@@ -8,6 +8,15 @@ all derived from a single computation — the Spark analog of the reference's
 ``layout_analysis_done_``/``ocr_done_`` memoization (reference:
 src/lib.cpp:325-336; SURVEY.md §4 O2).
 
+One page runner (``_page_runner``) is the only place a Spark operator calls
+the engine, as the reference drives every result surface from one
+``OCREngine`` (src/lib.cpp:125-341): it validates variables and the model blob
+on the driver and builds the per-row function once per task. ``ocr_pages``
+(and through it the streams and the lstm leaf) and the mixed-payload
+``extract_any`` both use it; each asks only for what it keeps —
+``extract_any`` keeps page_text/error, so its OCR rows run with orientation
+off.
+
 Vectorization note: Arrow moves batches JVM->Python zero-copy; within a batch
 the per-page orchestration is a thin Python loop (pages are the natural batch
 unit — each is ~10^5-10^6 pixels), and ALL pixel/glyph math inside is numpy:
@@ -31,11 +40,15 @@ Scale design (the 100 TB view):
 from __future__ import annotations
 
 import time
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from typing import TYPE_CHECKING
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
+
+if TYPE_CHECKING:
+    from tesseract_wasm_spark.engine.page import PageResult
 
 WORD_FIELDS = (
     "word_id int, line_id int, left int, top int, right int, bottom int, "
@@ -97,6 +110,63 @@ def rebalance_pages(
     return df.repartition(num_partitions, F.xxhash64("url"))
 
 
+def _page_runner(
+    *,
+    with_text: bool,
+    with_orientation: bool,
+    recognizer: str,
+    variables: dict[str, str] | None,
+    model_blob: bytes | None,
+) -> Callable[[], Callable[[bytes | None, str], PageResult]]:
+    """The one place a Spark operator runs the OCR engine.
+
+    Driver side, at plan time (this call): ``variables`` go through
+    config.VariableStore (the reference's per-engine setVariable,
+    src/lib.cpp:150-170 — an unknown name raises its message) and
+    ``model_blob`` is parsed, so a bad blob fails the CALL, not 10^4 tasks.
+
+    Worker side, once per task (the returned factory): the blob parses to an
+    EXPLICIT weights tuple, never worker-global state — Spark reuses python
+    workers across jobs, so a global would leak one job's model into the next
+    (a tampered-blob test once polluted an unrelated lstm job this way). The
+    factory returns the per-row ``(payload, lang) -> PageResult``; a NULL
+    payload (``html`` is nullable) is an error row, not a task failure."""
+    if variables is not None:
+        from tesseract_wasm_spark.config import VariableStore  # noqa: PLC0415
+
+        store = VariableStore()
+        for name, value in variables.items():
+            store.set(name, value)  # raises with reference message on unknown
+        variables = store.as_dict()
+    if model_blob is not None:
+        from tesseract_wasm_spark.engine.lstm_ctc import parse_lstm_model  # noqa: PLC0415
+
+        parse_lstm_model(model_blob)
+
+    def for_task() -> Callable[[bytes | None, str], PageResult]:
+        # imports inside the worker: keeps the task closure tiny
+        from tesseract_wasm_spark import drf  # noqa: PLC0415
+        from tesseract_wasm_spark.engine.page import PageResult, process_page  # noqa: PLC0415
+
+        lstm_model = None
+        if model_blob is not None:
+            from tesseract_wasm_spark.engine.lstm_ctc import parse_lstm_model  # noqa: PLC0415
+
+            lstm_model = parse_lstm_model(model_blob)[1]
+
+        def run_page(payload: bytes | None, lang: str) -> PageResult:
+            if payload is None:
+                return PageResult(error=drf.ERR_BAD_MAGIC)
+            return process_page(
+                bytes(payload), with_text=with_text, with_orientation=with_orientation,
+                recognizer=recognizer, variables=variables, lang=lang, lstm_model=lstm_model,
+            )
+
+        return run_page
+
+    return for_task
+
+
 def ocr_pages(
     pages: DataFrame,
     *,
@@ -113,29 +183,23 @@ def ocr_pages(
 
     ``model_blob``: a TWSM2 trained-weight blob (lstm_ctc.export_lstm_model)
     shipped to every worker through the task closure (Spark broadcasts
-    closure constants once per executor) and parsed into an EXPLICIT weight
-    tuple per task — the distributed form of OCREngine.loadModel: with
-    ``recognizer='lstm'`` every page decodes from the BLOB's weights, and
-    no worker-global state is touched (reused workers can't leak a model
-    between jobs).
+    closure constants once per executor) — the distributed form of
+    OCREngine.loadModel: with ``recognizer='lstm'`` every page decodes from
+    the BLOB's weights (see ``_page_runner``).
 
     ``with_text=False`` is the reference's layout-only cheap path
     (getBoundingBoxes with no model — src/lib.cpp:197-203): recognition is
     skipped entirely, the moral equivalent of column pruning through an
     opaque UDF (SURVEY.md §4 O3).
 
-    ``variables`` is the validated P11 parameter store (config.VariableStore
-    — whitelist, interword-space preservation, engine knobs); values are
-    validated on the driver and captured by the task closure, the distributed
-    analog of the reference's per-engine setVariable (src/lib.cpp:150-170).
+    ``variables`` is the P11 parameter store (config.VariableStore —
+    whitelist, interword-space preservation, engine knobs), validated on the
+    driver and captured by the task closure.
     """
-    if variables is not None:
-        from tesseract_wasm_spark.config import VariableStore  # noqa: PLC0415
-
-        store = VariableStore()
-        for name, value in variables.items():
-            store.set(name, value)  # raises with reference message on unknown
-        variables = store.as_dict()
+    page_runner = _page_runner(
+        with_text=with_text, with_orientation=with_orientation,
+        recognizer=recognizer, variables=variables, model_blob=model_blob,
+    )
     cols = ["url", "html"] + (["lang"] if "lang" in pages.columns else [])
     src = pages.select(*cols)  # column pruning before the shuffle: never move text/warc_ts
     if "lang" not in pages.columns:
@@ -143,40 +207,17 @@ def ocr_pages(
     if rebalance:
         src = rebalance_pages(src, num_partitions, strategy=rebalance_strategy)
 
-    if model_blob is not None:
-        # validate driver-side so a bad blob fails the CALL, not 10^4 tasks
-        from tesseract_wasm_spark.engine.lstm_ctc import parse_lstm_model  # noqa: PLC0415
-
-        parse_lstm_model(model_blob)
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # imports inside the worker: keeps the task closure tiny
         from pyspark import TaskContext  # noqa: PLC0415
 
-        from tesseract_wasm_spark.engine.page import process_page  # noqa: PLC0415
-
-        # the blob parses to an EXPLICIT weights tuple passed per page —
-        # never a worker-global registration: Spark reuses python worker
-        # processes across jobs, so global state would leak one job's model
-        # into the next (found by the test suite: a tampered-blob test
-        # polluted an unrelated lstm job's reused workers)
-        lstm_model = None
-        if model_blob is not None:
-            from tesseract_wasm_spark.engine.lstm_ctc import parse_lstm_model  # noqa: PLC0415
-
-            lstm_model = parse_lstm_model(model_blob)[1]
-
+        run_page = page_runner()
         tc = TaskContext.get()
         pid = tc.partitionId() if tc is not None else -1
         for seq, pdf in enumerate(batches):
             t0 = time.monotonic()
             out = []
             for url, payload, lang in zip(pdf["url"], pdf["html"], pdf["lang"]):
-                res = process_page(
-                    bytes(payload), with_text=with_text,
-                    with_orientation=with_orientation, recognizer=recognizer,
-                    variables=variables, lang=lang, lstm_model=lstm_model,
-                )
+                res = run_page(payload, lang)
                 # layout_boxes duplicate the words' rects on a full OCR run
                 # (the reference returns OCR boxes from getBoundingBoxes once
                 # recognition ran — src/ocr-engine.ts:236-239), so they are
@@ -251,11 +292,12 @@ def extract_any(
          the payload bytes to NULL for every row that doesn't need Python
          (html/image) — after this projection only OCR/PDF rows still carry
          their bytes;
-      2. an optional salt repartition (the same one-Exchange skew handling as
-         ``ocr_pages``);
-      3. one ``mapInPandas`` pass decodes the remaining payloads (DRF -> OCR
-         engine, PDF -> zlib-inflating stream parser) and passes the
-         already-extracted html/image rows through untouched.
+      2. an optional ``rebalance_pages`` salt repartition (the same
+         one-Exchange skew handling as ``ocr_pages``);
+      3. one ``mapInPandas`` pass decodes the remaining payloads (DRF -> the
+         shared page runner with orientation off, PDF -> zlib-inflating
+         stream parser) and passes the already-extracted html/image rows
+         through untouched.
 
     The pass-through costs one Arrow round-trip of the *extracted text*
     (≪ payload bytes); the alternative — a union of per-kind branches —
@@ -275,14 +317,12 @@ def extract_any(
     # contract silently (one malformed payload would otherwise throw
     # MALFORMED_CHARACTER_CODING and kill a 10^12-row job)
     ensure_total_decode(pages)
-
-    if variables is not None:
-        from tesseract_wasm_spark.config import VariableStore  # noqa: PLC0415
-
-        store = VariableStore()
-        for name, value in variables.items():
-            store.set(name, value)
-        variables = store.as_dict()
+    # only page_text/error survive this operator, and orientation does not
+    # feed recognition: skipping it leaves the text bit-identical
+    page_runner = _page_runner(
+        with_text=True, with_orientation=False, recognizer=recognizer,
+        variables=variables, model_blob=model_blob,
+    )
 
     payload = F.col("html")
     is_drf = F.substring(payload, 1, len(drf.MAGIC)) == F.lit(drf.MAGIC)
@@ -323,26 +363,12 @@ def extract_any(
         lang.alias("lang"),
     )
     if rebalance:
-        n = num_partitions or pages.sparkSession.sparkContext.defaultParallelism * 2
-        src = src.repartition(n, F.xxhash64("url"))
-
-    if model_blob is not None:
-        # same contract as ocr_pages: validate driver-side, ship through the
-        # task closure, parse per task — never worker-global state
-        from tesseract_wasm_spark.engine.lstm_ctc import parse_lstm_model  # noqa: PLC0415
-
-        parse_lstm_model(model_blob)
+        src = rebalance_pages(src, num_partitions)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from tesseract_wasm_spark.datapipe.pdftext import extract_pdf_bytes  # noqa: PLC0415
-        from tesseract_wasm_spark.engine.page import process_page  # noqa: PLC0415
 
-        lstm_model = None
-        if model_blob is not None:
-            from tesseract_wasm_spark.engine.lstm_ctc import parse_lstm_model  # noqa: PLC0415
-
-            lstm_model = parse_lstm_model(model_blob)[1]
-
+        run_page = page_runner()
         for pdf in batches:
             texts: list[str | None] = []
             errors: list[str | None] = []
@@ -350,11 +376,7 @@ def extract_any(
                 pdf["kind"], pdf["payload"], pdf["expr_text"], pdf["expr_error"], pdf["lang"]
             ):
                 if k == "ocr":
-                    res = process_page(
-                        bytes(raw), with_text=True, with_orientation=True,
-                        recognizer=recognizer, variables=variables, lang=lg,
-                        lstm_model=lstm_model,
-                    )
+                    res = run_page(raw, lg)
                     texts.append(res.page_text)
                     errors.append(res.error)
                 elif k == "pdf":

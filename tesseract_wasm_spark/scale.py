@@ -210,9 +210,10 @@ def run_extract_with_resume(
     OCR, PDF -> pdftext, HTML -> webtext) under the same checkpoint-resume
     contract: results keyed by url at ``{out_dir}/extracted``, anti-join on
     completed urls, idempotent partition replay. Per-kind counts land in the
-    summary; per-partition lineage for the heavy OCR branch stays available
-    via the run_with_resume path (the HTML/PDF branches are pure expressions
-    with no Python stage to instrument)."""
+    summary. No per-partition lineage yet: only the HTML branch is pure
+    expressions — DRF pages and PDF parsing both run in extract_any's
+    ``mapInPandas`` pass, which emits no lineage columns (the OCR-only
+    run_with_resume path has them)."""
 
     def count_kinds(res: DataFrame, _run_id: str) -> dict:
         by_kind = res.groupBy("kind").agg(F.count("*").alias("n")).collect()

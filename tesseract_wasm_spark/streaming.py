@@ -28,6 +28,21 @@ def read_pages_stream(spark: SparkSession, input_path: str,
     return reader.parquet(input_path)
 
 
+def _parquet_sink(df: DataFrame, output_path: str, checkpoint_path: str,
+                  available_now: bool) -> StreamingQuery:
+    """Append ``df`` to a checkpointed parquet sink; ``available_now`` drains
+    what is there and stops (see ocr_stream)."""
+    writer = (
+        df.writeStream.format("parquet")
+        .option("path", output_path)
+        .option("checkpointLocation", checkpoint_path)
+        .outputMode("append")
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def ocr_stream(
     spark: SparkSession,
     input_path: str,
@@ -49,15 +64,7 @@ def ocr_stream(
     """
     pages = read_pages_stream(spark, input_path)
     results = ocr_pages(pages, with_text=with_text, rebalance=False)
-    writer = (
-        results.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _parquet_sink(results, output_path, checkpoint_path, available_now)
 
 
 def extract_stream(
@@ -70,21 +77,13 @@ def extract_stream(
 ) -> StreamingQuery:
     """Continuous MIXED-payload extraction: new page files -> (url, kind,
     text_out, error) parquet, dispatching DRF/PDF/HTML exactly like the batch
-    pipeline.extract_any (the union of pruned branches composes with
-    Structured Streaming because every branch is stateless per row)."""
+    pipeline.extract_any (its one projection + one mapInPandas compose with
+    Structured Streaming because both are stateless per row)."""
     from tesseract_wasm_spark.pipeline import extract_any  # noqa: PLC0415
 
     pages = read_pages_stream(spark, input_path)
     results = extract_any(pages, rebalance=False)
-    writer = (
-        results.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _parquet_sink(results, output_path, checkpoint_path, available_now)
 
 
 def dedup_stream(
@@ -112,15 +111,7 @@ def dedup_stream(
         .withWatermark("warc_ts", watermark)
         .dropDuplicatesWithinWatermark(["content_md5"])
     )
-    writer = (
-        keyed.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _parquet_sink(keyed, output_path, checkpoint_path, available_now)
 
 
 def ingest_metrics_stream(
@@ -156,12 +147,5 @@ def ingest_metrics_stream(
             "payload_bytes",
         )
     )
-    writer = (
-        agg.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")  # append mode: windows emit once the watermark passes
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    # append mode: windows emit once the watermark passes
+    return _parquet_sink(agg, output_path, checkpoint_path, available_now)

@@ -4,6 +4,9 @@ Reference analogs cited per test."""
 
 from __future__ import annotations
 
+import struct
+import zlib
+
 import numpy as np
 import pytest
 from hypothesis import given, settings, strategies as st
@@ -73,6 +76,21 @@ def test_flags_start_end_of_line():
     assert starts == [ln.split()[0] for ln in SMALL_PAGE_LINES]
     ends = [w.text for w in res.words if w.flags & 2]
     assert ends == [ln.split()[-1] for ln in SMALL_PAGE_LINES]
+
+
+@pytest.mark.parametrize("body", [b"not zlib", zlib.compress(bytes(64))[:-6]],
+                         ids=["not-zlib", "truncated"])
+def test_corrupt_drf_body_is_error_value(body):
+    """A header-valid DRF page whose body is not zlib, or is cut short, has no
+    w*h*ch pixels: an error value from process_page (the pipeline's row
+    contract) and the reference's length message from loadImage."""
+    from tesseract_wasm_spark import drf
+    from tesseract_wasm_spark.api import createOCREngine
+
+    payload = drf.MAGIC + struct.pack("<iii", 4, 4, 4) + body
+    assert process_page(payload).error == drf.ERR_BAD_LENGTH
+    with pytest.raises(ValueError, match=drf.ERR_BAD_LENGTH):
+        createOCREngine().loadImage(payload)
 
 
 @pytest.mark.parametrize("dims", [(1, 1), (100, 100), (200, 200)])

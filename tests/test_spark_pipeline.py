@@ -330,3 +330,38 @@ def test_resume_pre_bucketing_fallback(spark, pages, tmp_path):
     assert s["pages"] == pages.count() - 5
     got = spark.read.parquet(f"{out}/results")
     assert got.select("url").distinct().count() == pages.count()
+
+
+def test_null_and_corrupt_payloads_are_error_rows(spark):
+    """A NULL ``html`` (nullable in the pages contract) and a header-valid DRF
+    page with a corrupt zlib body are error rows, not task failures, on both
+    operators that run the engine."""
+    import datetime as dt
+
+    import pandas as pd
+
+    from tesseract_wasm_spark import drf
+    from tesseract_wasm_spark.fixtures import PAGES_DDL
+    from tesseract_wasm_spark.pipeline import extract_any
+    from tesseract_wasm_spark.raster import render_page_drf
+
+    ts = dt.datetime(2024, 1, 1)
+    corrupt = drf.MAGIC + b"\x04\x00\x00\x00" * 3 + b"not zlib"
+    rows = pd.DataFrame([
+        {"url": "good", "warc_ts": ts, "html": render_page_drf(["ab cd"]),
+         "text": "ab cd\n", "lang": "eng"},
+        {"url": "corrupt", "warc_ts": ts, "html": corrupt, "text": None, "lang": "eng"},
+        {"url": "null", "warc_ts": ts, "html": None, "text": None, "lang": "eng"},
+    ])
+    pages = spark.createDataFrame(rows, schema=PAGES_DDL)
+
+    got = {r["url"]: r for r in ocr_pages(pages).collect()}
+    assert set(got) == {"good", "corrupt", "null"}
+    assert got["good"]["error"] is None and got["good"]["page_text"] == "ab cd\n"
+    assert got["corrupt"]["error"] == drf.ERR_BAD_LENGTH
+    assert got["null"]["error"] == drf.ERR_BAD_MAGIC
+
+    mixed = {r["url"]: r for r in extract_any(pages).collect()}
+    assert mixed["good"]["text_out"] == "ab cd\n"
+    assert mixed["corrupt"]["kind"] == "ocr"
+    assert mixed["corrupt"]["error"] is not None
